@@ -673,6 +673,26 @@ def test_ks_drift_two_phase_bucketed_path_is_exact(spark):
     assert r.ks_stat == 0.0 and not r.drifted
 
 
+def test_ks_drift_big_path_releases_grouped_cache_on_error(spark, monkeypatch):
+    """The bucketed path persists its grouped frame; a failure after that
+    (here in the fold) must still release it."""
+    from wsspark import quality
+
+    def _boom(grouped):
+        raise RuntimeError("fold failed")
+
+    monkeypatch.setattr(quality, "_ks_fold_best", _boom)
+    base = spark.createDataFrame([(float(i),) for i in range(200)], "v double")
+    cur = spark.createDataFrame(
+        [(float(i) + 0.5,) for i in range(150)], "v double"
+    )
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    with pytest.raises(RuntimeError, match="fold failed"):
+        quality.ks_drift(base, cur, ["v"], small_distinct=10)
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_ks_drift_outlier_skew_keeps_buckets_populated(spark):
     """Adversarial skew: one outlier at 1e12 with the bulk in [0, 1].
     Pure equal-width edges would send every bulk value to bucket 1 and

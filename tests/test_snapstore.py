@@ -2835,10 +2835,11 @@ def test_rewrite_commit_concurrent_data_cdf_order_independent(
     spark, tmp_path
 ):
     """r17 (advisor pin): ``_rewrite_commit`` writes the COW data and the
-    CDF sidecar as CONCURRENT jobs — the commit must be correct whichever
-    side lands first. A per-row sleepy nondeterministic filter (always
-    true, so the rows are unchanged) delays one side past the other, and
-    the end state + feed are asserted identical for both forced orders."""
+    CDF sidecar as CONCURRENT jobs through ``overlap``, each on its own
+    pool thread — the commit must be correct whichever side lands first.
+    A per-row sleepy nondeterministic filter (always true, so the rows
+    are unchanged) delays one side past the other, and the end state +
+    feed are asserted identical for both forced orders."""
     import time as _time
 
     from pyspark.sql import types as T
@@ -2865,9 +2866,9 @@ def test_rewrite_commit_concurrent_data_cdf_order_independent(
         )
         changes = pre.unionByName(post)
         slow = _sleepy(40)
-        if order == "cdf_first":       # data job (pooled) lands LAST
+        if order == "cdf_first":       # data job lands LAST
             new_data = new_data.filter(slow(F.col("id")))
-        else:                          # CDF (main thread) lands LAST
+        else:                          # CDF job lands LAST
             changes = changes.filter(slow(F.col("id")))
         v = ss._rewrite_commit(
             spark, root, m, list(m["files"]), new_data, "merge", None,
@@ -2894,29 +2895,46 @@ def test_rewrite_commit_concurrent_data_cdf_order_independent(
 def test_delete_dv_concurrent_sidecars_order_independent(
     spark, tmp_path, monkeypatch
 ):
-    """r17 (advisor pin): ``snap_delete_dv`` writes the DV sidecar (pooled
-    job) and the CDF sidecar (main thread) concurrently. Forcing the
-    pooled DV write to START after the CDF write completed (a delaying
-    ThreadPoolExecutor) must leave the same end state the default
-    interleaving produces."""
-    import concurrent.futures as _cf
-    import time as _time
+    """r17 (advisor pin): ``snap_delete_dv`` writes the DV sidecar and the
+    CDF sidecar as concurrent jobs through ``overlap``. Forcing the DV
+    write to START only after the CDF write has finished (a wrapping
+    ``overlap`` that gates the DV thunk on the CDF thunk) must leave the
+    same end state the default interleaving produces. The forced order is
+    checked on disk: when the DV thunk starts, the CDF sidecar is written
+    and the DV sidecar is not."""
+    import glob
+    import threading
 
-    class _DelayedPool(_cf.ThreadPoolExecutor):
-        def submit(self, fn, *a, **kw):
-            def _late():
-                _time.sleep(0.4)
-                return fn()
+    from wsspark import session
 
-            return super().submit(_late, *a, **kw)
+    delayed_root = str(tmp_path / "a")
+    calls = []
+
+    def _cdf_then_dv(dv, cdf):
+        cdf_done = threading.Event()
+        seen = {}
+
+        def _late_dv():
+            assert cdf_done.wait(timeout=120), "CDF thunk never finished"
+            seen["cdf"] = glob.glob(f"{delayed_root}/data/*/_cdf/_SUCCESS")
+            seen["dv"] = glob.glob(f"{delayed_root}/data/*/_dv")
+            return dv()
+
+        def _cdf():
+            try:
+                return cdf()
+            finally:
+                cdf_done.set()
+
+        out = session.overlap(_late_dv, _cdf)
+        calls.append(seen)
+        return out
 
     def _run(root: str, delay: bool) -> tuple[int, list, list]:
         ss.snap_commit(_df(spark, 0, 10), root)                     # v0
         v_en = ss.snap_enable_cdf(root)                             # v1
         if delay:
-            monkeypatch.setattr(
-                "concurrent.futures.ThreadPoolExecutor", _DelayedPool
-            )
+            monkeypatch.setattr(ss, "overlap", _cdf_then_dv)
         try:
             ss.snap_delete_dv(spark, root, "id >= 6")               # v2
         finally:
@@ -2928,8 +2946,12 @@ def test_delete_dv_concurrent_sidecars_order_independent(
         )
         return ss.snap_count(root), state, feed
 
-    got_delayed = _run(str(tmp_path / "a"), delay=True)
+    got_delayed = _run(delayed_root, delay=True)
+    # the forced order really happened: one overlap, CDF landed first
+    assert len(calls) == 1
+    assert len(calls[0]["cdf"]) == 1 and calls[0]["dv"] == []
     got_default = _run(str(tmp_path / "b"), delay=False)
+    assert len(calls) == 1  # the default run used the real overlap
     assert got_delayed == got_default
     assert got_delayed[0] == 6 and got_delayed[1] == list(range(6))
     assert got_delayed[2] == [(i, "delete") for i in range(6, 10)]

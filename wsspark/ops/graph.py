@@ -44,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from wsspark.session import overlap
+
 
 def pagerank(
     edges: DataFrame,
@@ -77,12 +79,9 @@ def pagerank(
 
     # The node set and the transition matrix are INDEPENDENT derivations
     # of the edge frame — two eager checkpoints that each re-execute the
-    # caller's edge plan. Overlap them (guide §2.6): the transition
-    # build runs on a driver thread while the node checkpoint + count
-    # run here, so the setup wall time is max(nodes, trans) instead of
-    # their sum.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # caller's edge plan. Overlap them (guide §2.6): the node checkpoint
+    # + count and the transition build run on two driver threads, so the
+    # setup wall time is max(nodes, trans) instead of their sum.
     def _build_trans() -> DataFrame:
         out_w = edges.groupBy(src).agg(F.sum(weight).alias("_ow"))
         return _ckpt(
@@ -94,15 +93,15 @@ def pagerank(
             )
         )
 
-    with ThreadPoolExecutor(max_workers=1) as _pool:
-        _f_trans = _pool.submit(_build_trans)
+    def _build_nodes() -> tuple[DataFrame, int]:
         nodes = _ckpt(
             edges.select(F.col(src).alias("node"))
             .unionByName(edges.select(F.col(dst).alias("node")))
             .distinct()
         )
-        n = nodes.count()
-        trans = _f_trans.result()
+        return nodes, nodes.count()
+
+    (nodes, n), trans = overlap(_build_nodes, _build_trans)
     if n == 0:
         raise ValueError("pagerank: empty edge frame (no nodes)")
     has_out = trans.select(

@@ -21,6 +21,7 @@ aggregate; nothing collects to the driver except the final run-summary row.
 from __future__ import annotations
 
 import datetime as dt
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,6 +31,7 @@ from wsspark import adapters, quality
 from wsspark.io import load_tables, write_report
 from wsspark.ops import financial, inventory, warehouse
 from wsspark.ops import movements as movements_ops
+from wsspark.session import overlap
 
 class Reports(dict):
     """dict of report DataFrames; ``cached`` lists the shared cached frames
@@ -209,15 +211,14 @@ def run_pipeline(
         # — submit them concurrently and let the scheduler pack the cluster
         # (local[N] or real executors) instead of draining one branch at a
         # time.
-        from concurrent.futures import ThreadPoolExecutor
-
         def _write(name: str) -> tuple[str, str]:
             path = os.path.join(output_dir, name)
             write_report(reports[name], path, fmt=fmt)
             return name, path
 
-        with ThreadPoolExecutor(max_workers=min(len(REPORT_NAMES), 8)) as pool:
-            written = dict(pool.map(_write, REPORT_NAMES))
+        written = dict(
+            overlap(*[functools.partial(_write, n) for n in REPORT_NAMES])
+        )
 
         if summary_table:
             from wsspark.io import append_table

@@ -19,6 +19,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from wsspark.session import overlap
+
 BAD_REFERENCE_ID = 9_999_999  # injected sentinel (gen/generate_data.py:344-348)
 POSITIVE_MOVEMENT_TYPES = ("IN", "RETURN")
 
@@ -330,17 +332,12 @@ def drift_report(
     edges = _drift_edges(base, numeric_cols)
     # the two stacked count aggregations are independent jobs once the
     # base-pinned edges exist — overlap them (guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
+    def _counts(df: DataFrame) -> dict[tuple[str, str], int]:
+        return _drift_counts(
+            df, numeric_cols, cat_cols, edges, n_buckets, max_cat_buckets
+        )
 
-    with ThreadPoolExecutor(max_workers=1) as _pool:
-        _f_bc = _pool.submit(
-            _drift_counts,
-            base, numeric_cols, cat_cols, edges, n_buckets, max_cat_buckets,
-        )
-        cc = _drift_counts(
-            current, numeric_cols, cat_cols, edges, n_buckets, max_cat_buckets
-        )
-        bc = _f_bc.result()
+    bc, cc = overlap(lambda: _counts(base), lambda: _counts(current))
     out = _psi_rows(numeric_cols, cat_cols, edges, bc, cc, psi_alert)
     return base.sparkSession.createDataFrame(
         sorted(out),
@@ -817,31 +814,31 @@ def _ks_stat_rows(
     ``small_distinct`` cap the window sort was — the skew fallback
     re-groups on quantile spans exactly as before."""
     spark = pooled.sparkSession
-    if True:  # keep the original indentation of the extracted body
-        # one aggregation over the cached frame: per-column distinct
-        # count (exact — pooled rows ARE the distinct values), bounds for
-        # the bucketing, and the side totals
-        meta = meta if meta is not None else {
-            r["col"]: r
-            for r in pooled.groupBy("col")
-            .agg(
-                F.count("*").alias("nd"),
-                F.min("val").alias("lo"),
-                F.max("val").alias("hi"),
-                F.sum("n_b").alias("nb"),
-                F.sum("n_c").alias("nc"),
-            )
-            .collect()
-        }
-        big = sorted(c for c, r in meta.items() if r["nd"] > small_distinct)
-        totals = F.broadcast(
-            spark.createDataFrame(
-                [(c, meta[c]["nb"], meta[c]["nc"]) for c in meta],
-                "col string, nb long, nc long",
-            )
+    # one aggregation over the cached frame: per-column distinct
+    # count (exact — pooled rows ARE the distinct values), bounds for
+    # the bucketing, and the side totals
+    meta = meta if meta is not None else {
+        r["col"]: r
+        for r in pooled.groupBy("col")
+        .agg(
+            F.count("*").alias("nd"),
+            F.min("val").alias("lo"),
+            F.max("val").alias("hi"),
+            F.sum("n_b").alias("nb"),
+            F.sum("n_c").alias("nc"),
         )
-        c_alpha = math.sqrt(-math.log(alpha / 2.0) / 2.0)
-        grouped_cache = None
+        .collect()
+    }
+    big = sorted(c for c, r in meta.items() if r["nd"] > small_distinct)
+    totals = F.broadcast(
+        spark.createDataFrame(
+            [(c, meta[c]["nb"], meta[c]["nc"]) for c in meta],
+            "col string, nb long, nc long",
+        )
+    )
+    c_alpha = math.sqrt(-math.log(alpha / 2.0) / 2.0)
+    grouped_cache = None
+    try:
         if big:
             # cheap equal-width assignment first; the grouped sums we
             # collect anyway double as the SKEW PROBE (ndist = distinct
@@ -958,9 +955,10 @@ def _ks_stat_rows(
         # eager one-row-per-column materialization (family convention:
         # driver-row results, hash-stable; lets the caller's cache go)
         rows = [tuple(r) for r in result.collect()]
+    finally:
         if grouped_cache is not None:
             grouped_cache.unpersist()
-        return rows
+    return rows
 
 
 def embedding_drift(
@@ -1029,12 +1027,7 @@ def _embedding_drift_row(
 
     # the two moment aggregations are independent jobs — overlap them
     # (guide §2.6); result dicts are keyed, so order cannot matter
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as _pool:
-        _f_mb = _pool.submit(_moments, base)
-        mc = _moments(current)
-        mb = _f_mb.result()
+    mb, mc = overlap(lambda: _moments(base), lambda: _moments(current))
     if not mb or not mc:
         raise ValueError("embedding_drift: empty snapshot")
     if set(mb) != set(mc):
@@ -1309,145 +1302,140 @@ def drift_suite(
     out: list[tuple] = []
     # r16: the three statistic families (numeric PSI+KS, categorical
     # top-k PSI, embedding Welch-z) are independent driver-composed job
-    # chains over the same two cached projections — submit them from a
-    # small thread pool so the scheduler overlaps their jobs (guide
+    # chains over the same two cached projections — submit them through
+    # ``overlap`` so the scheduler overlaps their jobs (guide
     # §2.6: actions are only sequential because the driver calls them
     # sequentially) instead of draining one family's straggler tail at a
     # time. Results are assembled in a fixed order (and sorted at the
     # end), so the output is bit-identical to the sequential run.
-    from concurrent.futures import ThreadPoolExecutor
-
     try:
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            # the one fact read per snapshot: materializes both caches
-            # (concurrently — they are independent jobs) and provides
-            # the row totals PSI's NULL buckets need
-            f_nb = pool.submit(b.count)
-            nc_rows = c.count()
-            nb_rows = f_nb.result()
+        # the one fact read per snapshot: materializes both caches
+        # (concurrently — they are independent jobs) and provides the
+        # row totals PSI's NULL buckets need
+        nb_rows, nc_rows = overlap(b.count, c.count)
 
-            def _numeric_family() -> list[tuple]:
-                rows: list[tuple] = []
-                pooled = _ks_pooled(b, c, numeric_cols).persist()
-                try:
-                    if plans_out is not None:
-                        plans_out["pooled"] = (
-                            pooled._jdf.queryExecution().toString()
-                        )
-                    # PSI edges + per-col non-null totals + the KS
-                    # meta probe (distinct count, pooled bounds), FUSED
-                    # into one agg over the DISTINCT-sized pooled frame
-                    # (base-side min/max == the fact's, distinct values
-                    # preserve extrema) — r15 paid this aggregation
-                    # twice (once here, once inside _ks_stat_rows)
-                    em = {
-                        r["col"]: r
-                        for r in pooled.groupBy("col")
-                        .agg(
-                            F.min(
-                                F.when(F.col("n_b") > 0, F.col("val"))
-                            ).alias("lo"),
-                            F.max(
-                                F.when(F.col("n_b") > 0, F.col("val"))
-                            ).alias("hi"),
-                            F.sum("n_b").alias("nnb"),
-                            F.sum("n_c").alias("nnc"),
-                            F.count("*").alias("nd"),
-                            F.min("val").alias("_plo"),
-                            F.max("val").alias("_phi"),
-                        )
-                        .collect()
-                    }
-                    edges = {
-                        c_: (em[c_]["lo"], em[c_]["hi"]) for c_ in numeric_cols
-                    }
-                    ks_meta = {
-                        c_: {
-                            "nd": em[c_]["nd"],
-                            "lo": em[c_]["_plo"],
-                            "hi": em[c_]["_phi"],
-                            "nb": em[c_]["nnb"],
-                            "nc": em[c_]["nnc"],
-                        }
-                        for c_ in em
-                    }
-                    # the PSI bucket-weighted counts and the KS cumsum
-                    # chain are independent job chains over the pooled
-                    # frame once the fused probe exists — overlap them
-                    with ThreadPoolExecutor(max_workers=1) as leg_pool:
-                        f_psi = leg_pool.submit(
-                            _suite_numeric_psi,
-                            pooled, numeric_cols, edges, em, nb_rows,
-                            nc_rows, n_buckets, psi_alert,
-                        )
-                        ks_rows = [
-                            ("ks", col, "numeric", n_b, n_c, stat, thr, dr)
-                            for col, n_b, n_c, stat, thr, dr in _ks_stat_rows(
-                                pooled, alpha, small_distinct, meta=ks_meta
-                            )
-                        ]
-                        rows += f_psi.result()
-                    rows += ks_rows
-                finally:
-                    pooled.unpersist()
-                return rows
-
-            def _cat_family() -> list[tuple]:
-                base_counts = _cat_value_counts(b, cat_cols)
+        def _numeric_family() -> list[tuple]:
+            rows: list[tuple] = []
+            pooled = _ks_pooled(b, c, numeric_cols).persist()
+            try:
                 if plans_out is not None:
-                    plans_out["cat"] = (
-                        base_counts._jdf.queryExecution().toString()
+                    plans_out["pooled"] = (
+                        pooled._jdf.queryExecution().toString()
                     )
-                topk_rows = _topk_values(base_counts, k)
-                # the two folds are independent jobs over the pinned
-                # top-k bucket set — overlap them
-                with ThreadPoolExecutor(max_workers=2) as fold_pool:
-                    f_tb = fold_pool.submit(
-                        _fold_to_buckets, base_counts, topk_rows, cat_cols, k
+                # PSI edges + per-col non-null totals + the KS
+                # meta probe (distinct count, pooled bounds), FUSED
+                # into one agg over the DISTINCT-sized pooled frame
+                # (base-side min/max == the fact's, distinct values
+                # preserve extrema) — r15 paid this aggregation
+                # twice (once here, once inside _ks_stat_rows)
+                em = {
+                    r["col"]: r
+                    for r in pooled.groupBy("col")
+                    .agg(
+                        F.min(
+                            F.when(F.col("n_b") > 0, F.col("val"))
+                        ).alias("lo"),
+                        F.max(
+                            F.when(F.col("n_b") > 0, F.col("val"))
+                        ).alias("hi"),
+                        F.sum("n_b").alias("nnb"),
+                        F.sum("n_c").alias("nnc"),
+                        F.count("*").alias("nd"),
+                        F.min("val").alias("_plo"),
+                        F.max("val").alias("_phi"),
                     )
-                    tc = _fold_to_buckets(
-                        _cat_value_counts(c, cat_cols), topk_rows, cat_cols, k
-                    )
-                    tb = f_tb.result()
-                return [
-                    ("topk_psi", col, kind, n_b, n_c, psi, psi_alert, drifted)
-                    for col, kind, n_b, n_c, psi, drifted in _psi_rows(
-                        [], cat_cols, {}, tb, tc, psi_alert
-                    )
-                ]
-
-            def _emb_family() -> list[tuple]:
-                if plans_out is not None:
-                    plans_out["emb"] = (
-                        b.select(F.posexplode(embedding_col))
-                        ._jdf.queryExecution()
-                        .toString()
-                    )
-                (n_b, n_c, _dim, _cos, max_z, _mean_z, z_crit, drifted) = (
-                    _embedding_drift_row(b, c, embedding_col, alpha)
+                    .collect()
+                }
+                edges = {
+                    c_: (em[c_]["lo"], em[c_]["hi"]) for c_ in numeric_cols
+                }
+                ks_meta = {
+                    c_: {
+                        "nd": em[c_]["nd"],
+                        "lo": em[c_]["_plo"],
+                        "hi": em[c_]["_phi"],
+                        "nb": em[c_]["nnb"],
+                        "nc": em[c_]["nnc"],
+                    }
+                    for c_ in em
+                }
+                # the PSI bucket-weighted counts and the KS cumsum
+                # chain are independent job chains over the pooled
+                # frame once the fused probe exists — overlap them
+                psi_rows, ks_rows = overlap(
+                    lambda: _suite_numeric_psi(
+                        pooled, numeric_cols, edges, em, nb_rows,
+                        nc_rows, n_buckets, psi_alert,
+                    ),
+                    lambda: _ks_stat_rows(
+                        pooled, alpha, small_distinct, meta=ks_meta
+                    ),
                 )
-                return [
-                    (
-                        "embedding",
-                        embedding_col,
-                        "embedding",
-                        n_b,
-                        n_c,
-                        max_z,
-                        z_crit,
-                        drifted,
-                    )
+                rows += psi_rows
+                rows += [
+                    ("ks", col, "numeric", n_b, n_c, stat, thr, dr)
+                    for col, n_b, n_c, stat, thr, dr in ks_rows
                 ]
+            finally:
+                pooled.unpersist()
+            return rows
 
-            futures = []
-            if numeric_cols:
-                futures.append(pool.submit(_numeric_family))
-            if cat_cols:
-                futures.append(pool.submit(_cat_family))
-            if embedding_col:
-                futures.append(pool.submit(_emb_family))
-            for f in futures:
-                out += f.result()
+        def _cat_family() -> list[tuple]:
+            base_counts = _cat_value_counts(b, cat_cols)
+            if plans_out is not None:
+                plans_out["cat"] = (
+                    base_counts._jdf.queryExecution().toString()
+                )
+            topk_rows = _topk_values(base_counts, k)
+            # the two folds are independent jobs over the pinned
+            # top-k bucket set — overlap them
+            tb, tc = overlap(
+                lambda: _fold_to_buckets(
+                    base_counts, topk_rows, cat_cols, k
+                ),
+                lambda: _fold_to_buckets(
+                    _cat_value_counts(c, cat_cols), topk_rows, cat_cols, k
+                ),
+            )
+            return [
+                ("topk_psi", col, kind, n_b, n_c, psi, psi_alert, drifted)
+                for col, kind, n_b, n_c, psi, drifted in _psi_rows(
+                    [], cat_cols, {}, tb, tc, psi_alert
+                )
+            ]
+
+        def _emb_family() -> list[tuple]:
+            if plans_out is not None:
+                plans_out["emb"] = (
+                    b.select(F.posexplode(embedding_col))
+                    ._jdf.queryExecution()
+                    .toString()
+                )
+            (n_b, n_c, _dim, _cos, max_z, _mean_z, z_crit, drifted) = (
+                _embedding_drift_row(b, c, embedding_col, alpha)
+            )
+            return [
+                (
+                    "embedding",
+                    embedding_col,
+                    "embedding",
+                    n_b,
+                    n_c,
+                    max_z,
+                    z_crit,
+                    drifted,
+                )
+            ]
+
+        families = []
+        if numeric_cols:
+            families.append(_numeric_family)
+        if cat_cols:
+            families.append(_cat_family)
+        if embedding_col:
+            families.append(_emb_family)
+        for rows in overlap(*families):
+            out += rows
     finally:
         b.unpersist()
         c.unpersist()

@@ -17,6 +17,7 @@ from wsspark.io import read_table
 from wsspark.llmops import corpus, dedup, fingerprint, hashvec, pii, similarity, srp, textstats
 from wsspark.queries import Query
 from wsspark.queries import exactsum as ex
+from wsspark.session import overlap
 
 SESSION_GAP_MIN = 30
 JACCARD_THRESHOLD = 0.6
@@ -1023,17 +1024,15 @@ def q_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The two index checkpoints are independent of the codebook training
     # (a driver-side kmeans over a 500-row sample) — overlap them
     # (guide §2.6) so the training's collect hides the checkpoint jobs.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as _pool:
-        _f_assigned = _pool.submit(assigned.localCheckpoint)
-        _f_centroids = _pool.submit(centroids.localCheckpoint)
+    def _books_and_codes():
         books = pq.train_codebooks(emb, m=16, k=32, sample=500)
-        # encode depends only on the trained books — start it on this
-        # thread while the index checkpoints drain their tails (r17)
-        codes = pq.encode(emb, books).localCheckpoint()
-        assigned = _f_assigned.result()
-        centroids = _f_centroids.result()
+        # encode depends only on the trained books — start it right
+        # away while the index checkpoints drain their tails (r17)
+        return books, pq.encode(emb, books).localCheckpoint()
+
+    assigned, centroids, (books, codes) = overlap(
+        assigned.localCheckpoint, centroids.localCheckpoint, _books_and_codes
+    )
     n_probe = similarity.auto_n_probe(n_cells)
     qvecs = {
         r.vec_id: np.asarray(r.embedding, dtype=np.float64)
@@ -2133,22 +2132,11 @@ def _pin_result(out, cap: int | None = None):
     first materializing the full oversized result. Cluster caveat,
     stated: localCheckpoint blocks die with their executor — acceptable
     for these oracle-gate-sized results (the failure mode is a recompute
-    error, never a wrong answer); deployments where executor loss is
-    routine (preemptible fleets) can set ``WSSPARK_PIN_CHECKPOINT_DIR``
-    to pin through a reliable ``checkpoint()`` to that storage path
-    instead."""
-    import os
-
+    error, never a wrong answer). The pin is always a ``localCheckpoint``
+    behind the per-partition cap guard: a reliable ``checkpoint()`` would
+    leave its files behind and set the context-global checkpoint dir."""
     cap = _result_cap() if cap is None else cap
-    ckpt_dir = os.environ.get("WSSPARK_PIN_CHECKPOINT_DIR")
-    guarded = _pin_cap_guard(out, cap)
-    if ckpt_dir:
-        sc = out.sparkSession.sparkContext
-        if sc._jsc.sc().getCheckpointDir().isEmpty():
-            sc.setCheckpointDir(ckpt_dir)
-        pinned = guarded.checkpoint(eager=True)
-    else:
-        pinned = guarded.localCheckpoint(eager=True)
+    pinned = _pin_cap_guard(out, cap).localCheckpoint(eager=True)
     if pinned.count() > cap:
         raise ValueError(
             f"snapstore driver query result exceeds the {cap}-row "
@@ -3031,21 +3019,18 @@ def q_ks_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # eager job chains (different column sets; the second mixes in a
     # different table) — overlap them (guide §2.6). Output assembly
     # order is fixed, so results are bit-identical.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        f_stationary = pool.submit(
-            ks_drift,
+    stationary, feed_swap = overlap(
+        lambda: ks_drift(
             li.filter(F.col("l_shipdate") < split),
             li.filter(F.col("l_shipdate") >= split),
             cols=["l_quantity"],
-        )
-        feed_swap = ks_drift(
+        ),
+        lambda: ks_drift(
             li.select(F.col("l_extendedprice").alias("price")),
             part.select(F.col("p_retailprice").alias("price")),
             cols=["price"],
-        )
-        stationary = f_stationary.result()
+        ),
+    )
     return stationary.unionByName(feed_swap)
 
 
@@ -3468,24 +3453,24 @@ def q_drift_suite_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # different tables and share nothing — overlap their driver-composed
     # job chains (guide §2.6); each call is eager, so the sequential
     # form drained one suite's tail before starting the other.
-    from concurrent.futures import ThreadPoolExecutor
+    def _embedded() -> DataFrame:
+        emb = read_table(spark, sf_dir, "embeddings")
+        return drift_suite(
+            emb.filter(F.col("vec_id") % 4 < 2),
+            emb.filter(F.col("vec_id") % 4 >= 2),
+            embedding_col="embedding",
+        )
 
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        f_tab = pool.submit(
-            drift_suite,
+    tabular, embedded = overlap(
+        lambda: drift_suite(
             li.filter(F.col("l_shipdate") < split),
             li.filter(F.col("l_shipdate") >= split),
             numeric_cols=["l_quantity", "l_extendedprice"],
             cat_cols=["l_returnflag"],
             k=100,
-        )
-        emb = read_table(spark, sf_dir, "embeddings")
-        embedded = drift_suite(
-            emb.filter(F.col("vec_id") % 4 < 2),
-            emb.filter(F.col("vec_id") % 4 >= 2),
-            embedding_col="embedding",
-        )
-        tabular = f_tab.result()
+        ),
+        _embedded,
+    )
     return tabular.unionByName(embedded)
 
 

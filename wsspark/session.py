@@ -32,10 +32,16 @@ run on local[N]):
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+from typing import Any
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# At most this many thunks of one ``overlap`` call run at once. Only the
+# pipeline's 12 report writes exceed it; every other site passes <= 4.
+OVERLAP_THREADS = 8
 
 
 def get_session(
@@ -48,6 +54,9 @@ def get_session(
 
     On a real cluster, callers pass ``master=None`` and let spark-submit own
     the master/deploy settings; locally we default to ``local[$SPARK_GRAFT_CPUS]``.
+    ``extra_conf`` entries are applied last and override any default here,
+    e.g. ``{"spark.scheduler.mode": "FAIR"}`` for deployments that prefer
+    even sharing between concurrent jobs over Spark's FIFO default.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
@@ -79,18 +88,33 @@ def get_session(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", os.environ.get("WSSPARK_UI", "false"))
         .config("spark.driver.memory", os.environ.get("WSSPARK_DRIVER_MEM", "8g"))
-        # FIFO (default) gives concurrent driver-thread jobs the back-fill
-        # behavior guide §2.6 wants; WSSPARK_SCHEDULER_MODE=FAIR flips the
-        # whole app for deployments that prefer even sharing — the engine's
-        # thread overlaps are scheduler-agnostic (r17 FAIR smoke in
-        # OPTIMIZATION_r17.md pins that claim).
-        .config(
-            "spark.scheduler.mode",
-            os.environ.get("WSSPARK_SCHEDULER_MODE", "FIFO"),
-        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
+
+
+def overlap(*thunks: Callable[[], Any]) -> list[Any]:
+    """Run ``thunks`` concurrently on driver threads and return their
+    results in argument order. This is the only way package code runs
+    Spark actions concurrently, so the scheduler packs independent jobs.
+
+    Every thunk runs to completion; then the first failure in argument
+    order is raised. Each thread inherits the caller's Spark local
+    properties (job group, description, scheduler pool) and session tags
+    (``spark.addTag``) as they are at this call, so ``cancelJobGroup``
+    reaches the jobs a thunk launches. Each thunk gets its own copy of the
+    properties, so concurrent SQL executions do not share state. Calls
+    nest.
+    """
+    from pyspark.util import inheritable_thread_target
+
+    spark = SparkSession.active()
+    workers = min(len(thunks), OVERLAP_THREADS)
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(t)) for t in thunks
+        ]
+    return [f.result() for f in futures]
